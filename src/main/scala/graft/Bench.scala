@@ -12,6 +12,11 @@ import org.apache.spark.sql.SparkSession
   * tail buffer even as the query count grows (round-1's single verbose
   * line overflowed that buffer and the driver recorded `parsed: null`).
   *
+  * Each query is timed through `SparkEntry.consume`: the full result
+  * is written to the noop sink, so the timed plan is the plan the
+  * query returns (every column evaluated, final sort kept), not a
+  * Catalyst-pruned row count.
+  *
   * `value`/`queries` are COLD first-run times (includes Catalyst
   * planning + whole-stage-codegen compilation — the driver-comparable
   * number). `warm_total` times an immediate second run of the same
@@ -91,7 +96,7 @@ object Bench {
       val t0 = System.nanoTime()
       val c0 = osBean.getProcessCpuTime
       try {
-        fn(spark, sfDir).count()
+        SparkEntry.consume(fn(spark, sfDir))
         Right(((System.nanoTime() - t0) / 1e9,
           (osBean.getProcessCpuTime - c0) / 1e9))
       } catch {

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -32,6 +33,29 @@ object SparkEntry {
       sources.Sources.queries ++
       streaming.EventStream.queries ++ streaming.DedupStream.queries ++
       recommend.AlsPipeline.queries
+
+  /** Runs a query result the way every timed path consumes it and
+    * returns its row count. The noop write evaluates every output
+    * column and keeps the final sort, so the plan that runs is the
+    * plan the query returns; `count()` would let Catalyst prune joins
+    * against key-unique aggregates, windows, UDFs and sorts. The row
+    * count is observed on the same pass.
+    *
+    * Streaming queries return their drained result through a
+    * `graft_stream_*` memory-sink view, and nothing else drops those:
+    * across repeated sweeps the retained results fill the driver heap.
+    * The write has consumed this result, so the views are dropped here.
+    */
+  def consume(df: DataFrame): Long = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("rows"))
+      .write.format("noop").mode("overwrite").save()
+    val spark = df.sparkSession
+    spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("graft_stream_"))
+      .foreach(t => spark.catalog.dropTempView(t.name))
+    obs.get("rows").asInstanceOf[Long]
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops

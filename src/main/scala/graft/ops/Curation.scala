@@ -385,12 +385,9 @@ object Curation {
       // The global sort exists ONLY for the cross-engine gate (exact
       // total order vs the oracle's ORDER BY): a corpus-sized range
       // shuffle whose sampling pass re-executes the tokenize stage.
-      // Note the profiling sweep does NOT pay it — EliminateSorts
-      // drops the orderBy under Profile's count() action (verified
-      // via `Profile … explainc cur_chunk`, SCALING.md round-11
-      // controls). A production chunker drops this line — see
-      // [[chunkAgg]], the gate-sort-free variant whose scaling
-      // exponent SCALING.md reports next to this one.
+      // A production chunker drops this line — see [[chunkAgg]], the
+      // gate-sort-free variant whose scaling exponent SCALING.md
+      // reports next to this one.
       .orderBy("doc_id", "chunk_idx")
 
   /** Production-shape chunker: identical span generation to

@@ -422,8 +422,7 @@ object Dedup {
     * mining work is O(delta probes), never O(corpus²).
     */
   private[graft] def deltaVerifiedEdges(s: SparkSession, d: String,
-      pred: Column = deltaDocPred, tag: String = "v1",
-      bcastDelta: Boolean = false): DataFrame = {
+      pred: Column = deltaDocPred, tag: String = "v1"): DataFrame = {
     val docs = documents(s, d).select(col("doc_id"), col("text"))
     val baseSigs = baseIndexSigs(s, d, pred, tag)
     val deltaSigs = minhashSignatures(docs.filter(pred))
@@ -432,25 +431,18 @@ object Dedup {
     val deltaBands = bandsOf(deltaSigs)
       .select(col("doc_id"), col("band_idx"), col("band_sig"))
     val allBands = baseIndexBands(s, d, pred, tag).unionByName(deltaBands)
-    // bcastDelta (the constant-sized-delta control, VERDICT r16 #4):
-    // a real daily batch's band rows are broadcast-sized, and with
-    // them broadcast the persisted band index streams through the
-    // probe with NO exchange — the registered 10%-fraction fixture
-    // keeps the planner's choice (its delta is corpus-fraction-sized,
-    // the degreeIncrementalWith adjudication)
-    val probeSide =
-      if (bcastDelta) broadcast(deltaBands.as("y")) else deltaBands.as("y")
+    // the 10%-fraction fixture's delta is corpus-fraction-sized, so
+    // the probe keeps the planner's join choice (the
+    // degreeIncrementalWith adjudication)
     val touching = allBands.as("x")
-      .join(probeSide,
+      .join(deltaBands.as("y"),
         col("x.band_idx") === col("y.band_idx")
           && col("x.band_sig") === col("y.band_sig")
           && col("x.doc_id") =!= col("y.doc_id"))
       .select(least(col("x.doc_id"), col("y.doc_id")).as("a_id"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("b_id"))
       .distinct()
-    verifyEdges(
-      if (bcastDelta) broadcast(touching) else touching, allSigs,
-      bcastCand = bcastDelta)
+    verifyEdges(touching, allSigs)
   }
 
   private[graft] def incrementalEdges(s: SparkSession, d: String): DataFrame =
@@ -796,25 +788,11 @@ object Dedup {
     * persisted intermediates the caller must unpersist.
     */
   private[graft] def mergeIncrementalLabels(baseLabels: DataFrame,
-      eDelta: DataFrame, docs: DataFrame,
-      bcastDelta: Boolean = false): (DataFrame, List[DataFrame]) = {
+      eDelta: DataFrame, docs: DataFrame): (DataFrame, List[DataFrame]) = {
     // project through L: endpoints fall back to themselves when
-    // unlabeled (delta docs, or base docs that were singletons).
-    // bcastDelta (const-delta control): prune the persisted labeling
-    // to the delta's own endpoint set first (one broadcast-semi
-    // scan-only pass) and broadcast the bounded result, so the label
-    // table is never exchanged for a daily-batch-sized delta
-    val (labA, labB) =
-      if (!bcastDelta)
-        (baseLabels.select(col("node").as("a_id"), col("label").as("la")),
-          baseLabels.select(col("node").as("b_id"), col("label").as("lb")))
-      else {
-        val ends = eDelta.select(col("a_id").as("node"))
-          .unionByName(eDelta.select(col("b_id").as("node"))).distinct()
-        val aff = baseLabels.join(broadcast(ends), Seq("node"), "left_semi")
-        (broadcast(aff.select(col("node").as("a_id"), col("label").as("la"))),
-          broadcast(aff.select(col("node").as("b_id"), col("label").as("lb"))))
-      }
+    // unlabeled (delta docs, or base docs that were singletons)
+    val labA = baseLabels.select(col("node").as("a_id"), col("label").as("la"))
+    val labB = baseLabels.select(col("node").as("b_id"), col("label").as("lb"))
     val proj = eDelta
       .join(labA, Seq("a_id"), "left_outer")
       .join(labB, Seq("b_id"), "left_outer")
@@ -864,48 +842,22 @@ object Dedup {
     out
   }
 
-  def dedupClustersIncremental(s: SparkSession, d: String): DataFrame =
-    dedupClustersIncrementalWith(s, d, deltaDocPred, "v1",
-      bcastDelta = false)
-
-  /** The update path, parameterized for the constant-sized-delta
-    * control (tools.Profile `incclustersconst`) — the
-    * `degreeIncrementalWith` convention: the registered fixture's
-    * 10% delta keeps the planner's join choices; a daily-batch-sized
-    * delta broadcasts every delta-derived relation so no probe ever
-    * exchanges a persisted artifact.
-    */
-  private[graft] def dedupClustersIncrementalWith(s: SparkSession,
-      d: String, pred: Column, tag: String, bcastDelta: Boolean,
-      memoOut: Boolean = true): DataFrame = {
+  def dedupClustersIncremental(s: SparkSession, d: String): DataFrame = {
     var toRelease: List[DataFrame] = Nil
-    def update(): DataFrame = {
-      val eDelta = deltaVerifiedEdges(s, d, pred, tag, bcastDelta)
+    val clusters = graft.util.ScratchIndex.materialize(
+      s, s"dedupclustinc_v1_${graft.util.ScratchIndex.corpusTag(d)}") {
+      val eDelta = deltaVerifiedEdges(s, d)
         .filter(col("jaccard") >= 0.5)
         .select(col("a_id"), col("b_id"))
       val (labeled, acquired) = mergeIncrementalLabels(
-        baseClusterLabels(s, d, pred, tag), eDelta,
-        documents(s, d).select(col("doc_id")), bcastDelta)
-      toRelease :::= acquired
+        baseClusterLabels(s, d), eDelta,
+        documents(s, d).select(col("doc_id")))
+      toRelease = acquired
       labeled
     }
-    // memoOut=false: the const-delta profile re-times the daily job
-    // per round; the registered query memoizes its converged output
-    // for gate/bench reuse like every other artifact
-    if (memoOut) {
-      val clusters = graft.util.ScratchIndex.materialize(
-        s, s"dedupclustinc_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
-        update()
-      }
-      // the materialize write executed the plan; drop the loop caches
-      toRelease.foreach(_.unpersist())
-      clusters.orderBy("doc_id")
-    } else {
-      // lazy return: the caller's action still needs the contraction
-      // loop's persisted levels — they stay cached (delta-bounded,
-      // profile-only; the JVM drops them with the session)
-      update().orderBy("doc_id")
-    }
+    // the materialize write executed the plan; drop the loop caches
+    toRelease.foreach(_.unpersist())
+    clusters.orderBy("doc_id")
   }
 
   /** Entity resolution via blocking + edit-distance verify: candidate

@@ -181,13 +181,11 @@ object Graph {
     var visited = frontier.withColumn("dist", lit(0L))
     var h = 1
     while (h <= MaxHops && counts.last > 0L) {
-      val fside = frontier
-      val next = fside.join(e, fside("v") === e("a"))
+      val next = frontier.join(e, frontier("v") === e("a"))
         .select(col("b").as("v")).distinct()
         .join(visited.select(col("v")), Seq("v"), "left_anti")
         .persist()
       toRelease ::= next
-      recordRoundPlan("bfs", next)
       counts += next.count()
       // truncate the new frontier's lineage before it feeds BOTH the
       // next hop's join and the growing visited union (the pagerank/
@@ -292,15 +290,13 @@ object Graph {
       var ranks = deg
         .select(col("src").as("v"), lit(1.0 / n).as("rank"))
       for (_ <- 1 to PrIters) {
-        val rside = ranks
-        val next = ce.join(rside, ce("src") === rside("v"))
+        val next = ce.join(ranks, ce("src") === ranks("v"))
           .groupBy(col("dst"))
           .agg((lit(0.15 / n) + lit(Damping) *
             sum(col("rank") / col("degree"))).as("rank"))
           .select(col("dst").as("v"), col("rank"))
           .persist()
         toRelease ::= next
-        recordRoundPlan("pagerank", next)
         ranks = org.apache.spark.sql.GraftColumnBridge
           .truncateLineage(next)
       }
@@ -549,14 +545,12 @@ object Graph {
       // materialize the persisted seed once (round 1 consumes it)
       labels.count(): Unit
       for (_ <- 1 to LpRounds) {
-        val lside = labels
-        val next = e.join(lside, e("src") === lside("v"))
+        val next = e.join(labels, e("src") === labels("v"))
           .select(col("dst").as("v"), col("lbl"))
           .unionAll(labels)
           .groupBy(col("v")).agg(min(col("lbl")).as("lbl"))
           .persist()
         toRelease ::= next
-        recordRoundPlan("labelprop", next)
         labels = org.apache.spark.sql.GraftColumnBridge
           .truncateLineage(next)
       }
@@ -821,33 +815,6 @@ object Graph {
   // so the hint changed no plan and only added the risk of forcing a
   // multi-GB broadcast at a scale where the planner would know better.
 
-  /** Physical plan of the FIRST executed round of each iterative
-    * build, keyed by query family — evidence hook: the loop plans
-    * live inside memoized artifact builds and never appear in the
-    * registered query's explain, so the loops deposit their first
-    * round's planned physical tree here for plans/ capture and spec
-    * assertions (debug surface only; never read by query paths).
-    * The FIRST round is the one the broadcast gate actually changes:
-    * its small side sits under a fresh corpus-scan aggregate whose
-    * size ESTIMATE is corpus-order, so the un-gated planner picks a
-    * sort-merge join there even though the true size is |V|; later
-    * rounds read the previous round's cached/LogicalRDD output,
-    * whose accurate small stats let auto-broadcast kick in anyway.
-    */
-  private[graft] val roundPlans =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def recordRoundPlan(key: String, df: DataFrame): Unit =
-    // containsKey gate BEFORE stringifying: putIfAbsent evaluates its
-    // value argument eagerly, so the naive form rebuilt (and then
-    // discarded) a multi-thousand-line executedPlan string on EVERY
-    // loop round — evidence tooling taxing the measured path (guide
-    // §1: the instrument must not distort the measurement). With the
-    // gate, only the first round of each family pays one stringify.
-    if (!roundPlans.containsKey(key))
-      roundPlans.putIfAbsent(
-        key, df.queryExecution.executedPlan.toString): Unit
-
   /** Co-purchase pairs over a lineitem subset — the [[coOrderEdgesPlan]]
     * shape, parameterized so the base/delta split shares one
     * definition with the full rebuild.
@@ -879,11 +846,9 @@ object Graph {
 
   /** Yesterday's edge relation (base orders only) — memoized; the
     * base lineitem is scanned for graph building once per corpus.
-    * `pred`/`tag` parameterize the base/delta split so the
-    * constant-sized-delta CONTROL (tools.Profile `incdegreeconst`,
-    * VERDICT r15 #6) runs the same artifacts against a delta that
-    * does not grow with the corpus; defaults are the registered
-    * query's fixture split with its original memo keys.
+    * `pred`/`tag` parameterize the base/delta split; defaults are
+    * the registered query's fixture split with its original memo
+    * keys.
     *
     * CLUSTERED layout: range-partitioned and sorted by (p1, p2), so
     * parquet row-group min/max stats can serve a pushed key-range
@@ -1036,28 +1001,23 @@ object Graph {
     * update cost is delta-local.
     */
   def degreeIncremental(s: SparkSession, d: String): DataFrame =
-    degreeIncrementalWith(s, d, deltaOrderPred, "v1", bcastDelta = false)
+    degreeIncrementalWith(s, d, deltaOrderPred, "v1")
 
-  /** The update path, parameterized for the constant-sized-delta
-    * control: `bcastDelta` picks the dup-probe shape — the REGISTERED
-    * query keeps shuffle-hash because its fixture delta is 10% of the
-    * corpus (4M pairs at sf10, past profitable broadcast size — the
-    * r15 adjudication), but a real constant-sized daily batch IS
-    * broadcast-sized, and with the delta broadcast the base-edge side
-    * has NO exchange at all: the probe is one scan-only pass.
+  /** The update path over a given delta predicate. The dup probe is
+    * shuffle-hash with the delta as build side: the fixture delta is
+    * 10% of the corpus (4M pairs at sf10, past profitable broadcast
+    * size — the r15 adjudication).
     */
   private[graft] def degreeIncrementalWith(s: SparkSession, d: String,
-      pred: Column, tag: String, bcastDelta: Boolean): DataFrame = {
+      pred: Column, tag: String): DataFrame = {
     val deltaPairs = deltaGraphPairs(s, d, pred, tag)
     // delta pairs already present in the base: ONE probe pass over
     // the persisted base edges (output ≤ |delta|), pruned to the
     // batch's key envelope so the range-sorted layout skips row
     // groups outside the batch's footprint
-    val hinted = if (bcastDelta) broadcast(deltaPairs)
-      else deltaPairs.hint("shuffle_hash")
     val dup = pruneEdges(baseGraphEdges(s, d, pred, tag),
         keyEnvelope(deltaPairs))
-      .join(hinted, Seq("p1", "p2"), "left_semi")
+      .join(deltaPairs.hint("shuffle_hash"), Seq("p1", "p2"), "left_semi")
     val inc = degreesOf(deltaPairs)
       .select(col("v"), col("degree").as("d_over"))
       .join(degreesOf(dup).select(col("v"), col("degree").as("d_dup")),
@@ -1155,16 +1115,13 @@ object Graph {
     * consume it.
     */
   private[graft] def freshDeltaEdges(s: SparkSession, d: String,
-      pred: Column = deltaOrderPred, tag: String = "v1",
-      bcastDelta: Boolean = false): DataFrame =
+      pred: Column = deltaOrderPred, tag: String = "v1"): DataFrame =
     graft.util.ScratchIndex.materialize(
         s, s"deltafresh_${tag}_${graft.util.ScratchIndex.corpusTag(d)}") {
       val deltaAll = deltaGraphPairs(s, d, pred, tag)
-      val hinted = if (bcastDelta) broadcast(deltaAll)
-        else deltaAll.hint("shuffle_hash")
       val dup = pruneEdges(baseGraphEdges(s, d, pred, tag),
           keyEnvelope(deltaAll))
-        .join(hinted, Seq("p1", "p2"), "left_semi")
+        .join(deltaAll.hint("shuffle_hash"), Seq("p1", "p2"), "left_semi")
       deltaAll.join(dup, Seq("p1", "p2"), "left_anti")
     }
 
@@ -1216,8 +1173,7 @@ object Graph {
     * cost.
     */
   def trianglesIncremental(s: SparkSession, d: String): DataFrame =
-    trianglesIncrementalParts(s, d, deltaOrderPred, "v1",
-        bcastDelta = false)
+    trianglesIncrementalParts(s, d, deltaOrderPred, "v1")
       .select(col("n_triangles"), col("n_edges"),
         col("n_left_vertices"), col("max_vertex"))
 
@@ -1227,11 +1183,8 @@ object Graph {
     * schema.
     */
   private[graft] def trianglesIncrementalParts(s: SparkSession,
-      d: String, pred: Column, tag: String,
-      bcastDelta: Boolean): DataFrame = {
-    val fresh = freshDeltaEdges(s, d, pred, tag, bcastDelta)
-    def hinted(df: DataFrame): DataFrame =
-      if (bcastDelta) broadcast(df) else df.hint("shuffle_hash")
+      d: String, pred: Column, tag: String): DataFrame = {
+    val fresh = freshDeltaEdges(s, d, pred, tag)
     // the batch's key envelope, once: every base-artifact probe below
     // pre-filters by it so the range-sorted layouts skip row groups
     // outside the batch's footprint (pure pruning — see keyEnvelope)
@@ -1250,7 +1203,7 @@ object Graph {
     // shuffle-hash build map of array payloads cannot spill (measured
     // SparkOutOfMemoryError at the sf10 fixture; sort-merge spills
     // gracefully and AQE still picks hash when the pruned side fits)
-    val t1 = hinted(fresh)
+    val t1 = fresh.hint("shuffle_hash")
       .join(adjA.select(col("v").as("va"), col("nbrs").as("na")),
         col("p1") === col("va")).drop("va")
       .join(adjB.select(col("v").as("vb"), col("nbrs").as("nb")),
@@ -1411,14 +1364,11 @@ object Graph {
         alive = nSurv > 0L
         if (alive) {
           tagged = tagged.unionAll(surv.withColumn("r", lit(r.toLong)))
-          val s1 = surv
-          val s2 = surv
           val next = edges
-            .join(s1, edges("src") === s1("v"), "left_semi")
-            .join(s2, edges("dst") === s2("v"), "left_semi")
+            .join(surv, edges("src") === surv("v"), "left_semi")
+            .join(surv, edges("dst") === surv("v"), "left_semi")
             .persist()
           toRelease ::= next
-          recordRoundPlan("kcore", next)
           edges = org.apache.spark.sql.GraftColumnBridge
             .truncateLineage(next)
         }

@@ -42,7 +42,14 @@ import graft.util.Tables._
   *       accumulation-order delta ≈ sqrt(n)·ε·Σ|x| at the LARGEST
   *       compare scale. A 1e10-magnitude sum rounded to 4 decimals
   *       asks for ~14 significant digits — float sums drift by ~1e-4
-  *       there; such sums round to 2 decimals (50x headroom).
+  *       there.
+  *    4. SUMS whose magnitude leaves no room to round finer than the
+  *       data (a product of two 2-decimal columns, exact at 4
+  *       decimals, reported at 2) → cast the inputs to DECIMAL, sum
+  *       exactly, round once, cast to double. A float sum rounded to
+  *       2 splits on exact half-cent ties (HALF_UP vs DuckDB's
+  *       binary rounding, 0.01 apart); the exact decimal sum rounds
+  *       the same way in both engines.
   *
   * Scale notes are inline per query: at 100 TB the fact tables
   * (lineitem/orders/events) are the big sides; dimensions
@@ -206,18 +213,20 @@ object Relational {
       .join(broadcast(nation(s, d)), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(
-        // 1e10-magnitude float-product sum: 2 decimals, not 4 — see
-        // the taxonomy note above (half-cell must dominate the
-        // engines' accumulation-order delta at the largest compare
-        // scale; observed 1e-4 at the 10x fixture)
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"),
+        // exact DECIMAL product and sum, rounded once — taxonomy
+        // case 4 above (a 1e10-magnitude float sum cannot round finer
+        // than its data, and rounding it to 2 splits on half-cent ties)
+        round(sum(col("l_extendedprice").cast("decimal(15,2)")
+            * (lit(1) - col("l_discount").cast("decimal(15,2)"))), 2)
+          .cast("double").as("revenue"),
         count(lit(1)).as("n_lines"))
       .orderBy("n_name")
 
   val joinMultiAggSql: String =
     """SELECT n_name,
-      |       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
+      |       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+      |                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+      |            AS DOUBLE) AS revenue,
       |       count(*) AS n_lines
       |FROM lineitem
       |JOIN orders   ON l_orderkey = o_orderkey

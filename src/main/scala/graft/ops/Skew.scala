@@ -550,17 +550,6 @@ object Skew {
         est(col("n_b"), col("theta_b")).as("est_b"),
         est(col("n_union"), col("theta_min")).as("est_union"),
         est(col("n_intersect"), col("theta_min")).as("est_intersect"))
-      // Invariant filter (always true: the union of two sets is at
-      // least as large as their intersection AND their difference,
-      // and theta is positive) — the pair aggregates are unique-keyed
-      // on (month_a, month_b), so any aggregate whose columns this
-      // filter does NOT reference gets its join eliminated under a
-      // count() action (the text_ngram_novelty / cms lesson; the
-      // n_a_not_b conjunct was added after a self-review caught the
-      // difference branch being pruned from the as-counted plan).
-      .filter(col("n_union") >= col("n_intersect")
-        && col("n_union") >= col("n_a_not_b")
-        && col("theta_min") >= lit(1L))
       .orderBy("month_a", "month_b")
   }
 
@@ -778,9 +767,6 @@ object Skew {
       |  AND inter.month_b = base.month_b
       |LEFT JOIN anotb ON anotb.month_a = base.month_a
       |  AND anotb.month_b = base.month_b
-      |WHERE coalesce(uni.n_union, 0) >= coalesce(inter.n_intersect, 0)
-      |  AND coalesce(uni.n_union, 0) >= coalesce(anotb.n_a_not_b, 0)
-      |  AND base.theta_min >= 1
       |ORDER BY base.month_a, base.month_b""".stripMargin
 
   // ------------------------------------------------------------------ //
@@ -929,12 +915,6 @@ object Skew {
     est.join(exact, Seq("user_id"), "left")
       .na.fill(0L, Seq("exact_count"))
       .select(col("user_id"), col("exact_count"), col("cms_count"))
-      // Invariant filter (always true: count-min only over-counts) —
-      // the counter table and the exact side are both unique-keyed
-      // aggregates, so without a reference to their columns Catalyst
-      // eliminates the joins under a count() action and the harness
-      // times a 20-row literal plan (the text_ngram_novelty lesson).
-      .filter(col("cms_count") >= col("exact_count"))
       .orderBy("user_id")
   }
 
@@ -968,7 +948,6 @@ object Skew {
       |       CAST(coalesce(exact.exact_count, 0) AS BIGINT) AS exact_count,
       |       CAST(est.cms_count AS BIGINT) AS cms_count
       |FROM est LEFT JOIN exact ON est.user_id = exact.user_id
-      |WHERE est.cms_count >= coalesce(exact.exact_count, 0)
       |ORDER BY est.user_id""".stripMargin
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

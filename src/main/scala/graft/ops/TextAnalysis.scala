@@ -545,26 +545,16 @@ object TextAnalysis {
       .na.fill(0L, Seq("n_novel"))
       .withColumn("novelty",
         col("n_novel").cast("double") / col("n_shingles").cast("double"))
-      // Invariant filter (always true: counts are non-negative and a
-      // doc cannot own more shingles than it has) — kept so a
-      // row-count-only action still executes the real pipeline:
-      // without it Catalyst proves `novel` unique on the join key,
-      // eliminates the left join under count(), and prunes the whole
-      // novelty computation down to a parquet metadata count — the
-      // harness would then time an empty plan (explainc-verified).
-      // A user counting documents should count `documents`, not this.
-      .filter(col("novelty") >= 0.0 && col("n_novel") <= col("n_shingles"))
       .orderBy("doc_id")
   }
 
   /** One core replay for BOTH novelty oracles (they must stay in
     * lockstep — the incremental form IS the same computation plus a
     * delta predicate, and letting two near-identical strings drift
-    * would silently break the merge ≡ rebuild relationship). The
-    * WHERE mirrors the Spark side's always-true invariant filter so
-    * both query texts agree that it is part of the contract.
+    * would silently break the merge ≡ rebuild relationship). `where`
+    * is the whole WHERE clause, empty for the full-corpus query.
     */
-  private def noveltySqlCore(extraWhere: String): String =
+  private def noveltySqlCore(where: String): String =
     s"""WITH t AS (
        |  SELECT doc_id, ${Dedup.shinglesSql} AS sh
        |  FROM (SELECT doc_id,
@@ -582,8 +572,7 @@ object TextAnalysis {
        |       CAST(coalesce(novel.n_novel, 0) AS BIGINT) AS n_novel,
        |       CAST(coalesce(novel.n_novel, 0) AS DOUBLE)
        |         / CAST(len(t.sh) AS DOUBLE) AS novelty
-       |FROM t LEFT JOIN novel ON t.doc_id = novel.doc_id
-       |WHERE coalesce(novel.n_novel, 0) BETWEEN 0 AND len(t.sh)$extraWhere
+       |FROM t LEFT JOIN novel ON t.doc_id = novel.doc_id$where
        |ORDER BY t.doc_id""".stripMargin
 
   val ngramNoveltySql: String = noveltySqlCore("")
@@ -610,8 +599,7 @@ object TextAnalysis {
     * shuffled, never re-derived. Daily cost ∝ delta shingles + one
     * index scan (co-locatable by bucketing the index on the shingle
     * key at cluster scale). Same aggregate-only form as the base
-    * query — no shingle-keyed join-back, and the same always-true
-    * invariant filter so the as-counted plan is the real plan.
+    * query — no shingle-keyed join-back.
     */
   def noveltyIncremental(s: SparkSession, d: String): DataFrame = {
     val deltaPred = Dedup.deltaDocPred
@@ -639,7 +627,6 @@ object TextAnalysis {
       .na.fill(0L, Seq("n_novel"))
       .withColumn("novelty",
         col("n_novel").cast("double") / col("n_shingles").cast("double"))
-      .filter(col("novelty") >= 0.0 && col("n_novel") <= col("n_shingles"))
       .orderBy("doc_id")
   }
 
@@ -649,7 +636,7 @@ object TextAnalysis {
     * proof.
     */
   val noveltyIncrementalSql: String =
-    noveltySqlCore(" AND t.doc_id % 10 = 7")
+    noveltySqlCore("\nWHERE t.doc_id % 10 = 7")
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_novelty_incremental" -> (noveltyIncremental _),

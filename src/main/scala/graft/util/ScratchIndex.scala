@@ -249,15 +249,6 @@ object ScratchIndex {
     if (dst.exists()) sz(dst) else 0L
   }
 
-  /** Drop a pid-scoped memoized artifact (measurement-only: profile
-    * loops re-time a daily publish by dropping its key between
-    * rounds; registered query paths never drop).
-    */
-  def dropKey(key: String): Unit = {
-    val dst = new File(root, key)
-    if (dst.exists()) deleteRecursively(dst)
-  }
-
   /** A named scratch directory under the pid-scoped root, for callers
     * that manage their own file layout (streaming checkpoints/sinks).
     * Pid-scoping matters because those callers typically START by

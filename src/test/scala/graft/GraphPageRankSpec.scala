@@ -225,7 +225,7 @@ class GraphPageRankSpec extends SparkTestBase {
       b <- ns if a < b
     } yield nbr(a).count(c => c > b && nbr(b).contains(c)).toLong).sum
     val parts = Graph.trianglesIncrementalParts(spark, sf,
-        pmod($"l_orderkey", lit(10)) === 7, "v1", bcastDelta = false)
+        pmod($"l_orderkey", lit(10)) === 7, "v1")
       .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
     assert(parts.length === 1)
     val (nTri, nEdges, nLeft, maxV, t1, t2, t3) = parts.head

@@ -116,19 +116,16 @@ class Relational3Spec extends SparkTestBase {
       s"non-broadcast join in the broadcast-mode agg update:\n$p2")
   }
 
-  test("incremental patch joins survive the as-counted plan " +
-      "(count-prunability guard)") {
-    // bench and the profile sweeps consume by count(); a left join
-    // against a key-unique aggregate is join-ELIMINATED under a bare
-    // count unless a computed column is referenced (NOTES r14). Both
-    // incremental finals must keep their patch join in the as-counted
-    // plan or their sweep cells time a plain scan.
+  test("incremental patch joins survive in the consumed plan") {
+    // a left join against a key-unique aggregate is a join-elimination
+    // candidate: both incremental finals must keep their patch join in
+    // the plan SparkEntry.consume runs, or the timed cell is a plain
+    // state scan
     for (q <- Seq("rel_agg_incremental", "rel_scd2_incremental")) {
-      val counted = SparkEntry.queries(q)(spark, sf).groupBy().count()
-      counted.collect()
-      val p = counted.queryExecution.executedPlan.toString()
-      assert(p.contains("LeftOuter"),
-        s"$q lost its patch join under count():\n$p")
+      val df = SparkEntry.queries(q)(spark, sf)
+      assert(SparkEntry.consume(df) > 0L, s"$q returned no rows")
+      val p = df.queryExecution.executedPlan.toString()
+      assert(p.contains("LeftOuter"), s"$q lost its patch join:\n$p")
     }
   }
 

@@ -15,7 +15,7 @@ class RelationalSpec extends SparkTestBase {
 
   test("every query runs non-empty at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
+      val n = SparkEntry.consume(fn(spark, sf))
       assert(n > 0, s"query $name returned 0 rows")
     }
   }

@@ -343,6 +343,12 @@ class SkewSketchSpec extends SparkTestBase {
     }
   }
 
+  test("bottom-k buffer rejects a non-positive capacity") {
+    intercept[IllegalArgumentException] {
+      new graft.functions.BottomK.LongBottomSet(0)
+    }
+  }
+
   test("portable theta: estimates track exact overlaps within the RSE bound") {
     // K=64 → RSE ≈ 1/√63 ≈ 12.6%; per-estimate bound 3σ (+2 absolute
     // for tiny sets) against the exact distinct part sets at the
